@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
-  * sys.env("SPARK_GRAFT_SF_DIR") and prints ONE JSON line
+  * sys.env("SPARK_GRAFT_SF_DIR") (or only the queries named as arguments)
+  * and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
   * Failed queries are reported explicitly under "errors" (never folded
   * into a timing — a failed query must not look like a fast one).
@@ -11,19 +10,16 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    // optional: query names restrict the timed loop (per-query timing in
+    // the bench's own session); the driver always runs the full registry
+    val only = args.toSet
+    val spark = Session.builder()
       // bench parquet files are a few MB: default 128m splits would serialize
       // every scan onto 1-2 cores. 1m splits ≈ one split per core at sf0.1 —
       // the local-mode analogue of sizing splits to the cluster (the conf a
       // real deployment tunes per table size).
       .config("spark.sql.files.maxPartitionBytes", "1m")
       .config("spark.sql.files.openCostInBytes", "256k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -45,7 +41,10 @@ object Bench {
 
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors  = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    only.diff(SparkEntry.queries.keySet).foreach(errors(_) = "unknown query")
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.isEmpty || only(name) }
+      .foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()

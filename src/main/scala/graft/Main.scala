@@ -27,16 +27,18 @@ import org.apache.spark.sql.SparkSession
   *     clustered by the Morton interleave of two numeric columns and write
   *     its min/max skipping manifest (see [[sources.Layout]])
   *   list                  — list registered query names
-  *   bench                 — delegate to [[Bench]] (one JSON line)
+  *   bench [query…]        — delegate to [[Bench]] (one JSON line)
   */
 object Main {
 
   private def session(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
+    val b = Session.builder()
+    // SPARK_MASTER: the deployment's cluster master in place of local[n]
+    val spark = sys.env.get("SPARK_MASTER").fold(b)(b.master)
+      // static conf read only by the Thrift server (`serve`): must be set at
+      // session creation; lets beeline use unqualified view names (the
+      // global_temp.* registrations in Serve work regardless)
+      .config("spark.sql.hive.thriftServer.singleSession", "true")
       // native expressions reachable from SQL text (`sql` subcommand)
       .withExtensions(new org.apache.spark.sql.graftx.GraftExtensions)
       .getOrCreate()
@@ -138,19 +140,7 @@ object Main {
       // JDBC child sessions via the context conf in registerViews)
       val mviews = rest.drop(3).headOption
         .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-      // dedicated builder: singleSession is a static conf (must be set at
-      // session creation) and lets beeline use unqualified view names; the
-      // global_temp.* registrations in Serve work regardless
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.hive.thriftServer.singleSession", "true")
-        .withExtensions(new org.apache.spark.sql.graftx.GraftExtensions)
-        .getOrCreate()
-      org.apache.spark.sql.graftx.GraftExtensions.register(spark)
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = session()
       Tables.All.foreach { t =>
         if (new java.io.File(s"$dir/$t.parquet").exists())
           Tables.load(spark, dir, t).createOrReplaceTempView(t)
@@ -310,8 +300,8 @@ object Main {
         .foreach { case (t, v) => println(s"[txn] $t @ v$v") }
     case "list" :: Nil =>
       SparkEntry.queries.keys.toSeq.sorted.foreach(println)
-    case "bench" :: Nil =>
-      Bench.main(Array.empty)
+    case "bench" :: names =>
+      Bench.main(names.toArray)
     case _ =>
       System.err.println(
         "usage: graft ingest <candles|trades|order_book> <apiParquet> <outPath> <start> <end>\n" +
@@ -343,7 +333,7 @@ object Main {
           "       graft txn recover <txnRoot>          — roll crashed cross-table txns forward\n" +
           "       graft txn snapshot <txnRoot> <t1,t2> — split-free per-table versions\n" +
           "       graft list\n" +
-          "       graft bench")
+          "       graft bench [query…]")
       sys.exit(1)
   }
 }

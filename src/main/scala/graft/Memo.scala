@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
+import scala.util.control.NonFatal
 
 /** Per-dir memoization of session-cached base relations (the shared-base
   * discipline: one fact scan feeds many registered queries). The wrinkle
@@ -41,7 +42,7 @@ object Memo {
     registry.forEach { map =>
       map.values.forEach { df =>
         try df.unpersist(blocking = true)
-        catch { case _: Throwable => () } // a stopped session has no blocks
+        catch { case NonFatal(_) => () } // a stopped session has no blocks
       }
       map.clear()
     }

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
 
 /** Plan audit over registered queries — counts the plan features that
   * matter at 100 TB (pushed filters, broadcast joins, exchanges, codegen
@@ -81,10 +82,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val rows = scala.collection.mutable.LinkedHashMap[String, String]()
@@ -93,7 +91,7 @@ object PlanAudit {
         val f = features(SparkEntry.queries(n)(spark, sfDir))
         rows(n) = Keys.map(k => s""""$k":${f(k)}""").mkString("{", ",", "}")
         println(f"$n%-24s " + Keys.map(k => s"$k=${f(k)}").mkString(" "))
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         println(s"$n ERROR ${Option(e.getMessage).getOrElse(e.getClass.getName).take(80)}")
       }
     }

@@ -367,12 +367,7 @@ object ScaleProbe {
     // appends its section to SCALEPROBE.md without re-running the full sweep
     if (args.headOption.contains("columnar")) {
       val rows = args.lift(1).map(_.toLong).getOrElse(5000000L)
-      val spark = SparkSession.builder()
-        .master(s"local[${math.min(32, Runtime.getRuntime.availableProcessors)}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val spark = Session.builder().getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       val section = probeColumnarScan(spark, rows)
       java.nio.file.Files.write(java.nio.file.Paths.get("SCALEPROBE.md"),
@@ -390,14 +385,9 @@ object ScaleProbe {
       "graph_ppr_recs", "recursive_sql_reach", "contrastive_hard_negatives",
       "ann_ivfpq_topk", "ingest_grid_candles")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val cpus = Session.cpus()
+    val spark = Session.builder(cpus)
       .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,13 +8,8 @@ object Verify {
     // optional: query names after <outDir> restrict the dump (dev iteration);
     // the driver always runs the full surface (no extra args)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // unset SPARK_GRAFT_CPUS keeps the correctness gate's 4-core default
+    val spark = Session.builder(Session.cpus(4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -1940,8 +1940,8 @@ object Mining extends QueryPack {
     * longer series upgrades to the published STOMP/SCAMP diagonal-batch
     * scheme; the per-instrument partitioning is unchanged.
     */
-  /** lazy inner build — (result frame, pair cache); the plan seam for the
-    * localized [[tsMatrixProfile]] (PlanDump archives this frame's plan)
+  /** lazy inner build — (result frame, pair cache) that the localized
+    * [[tsMatrixProfile]] collects, then releases the pair cache
     */
   private[graft] def tsMatrixProfileInner(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {

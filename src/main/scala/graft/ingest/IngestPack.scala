@@ -548,7 +548,7 @@ object IngestPack extends QueryPack {
     * same projection, window assignment and range from lineitem directly.
     */
   /** one materialized grid table per data dir per JVM: query CONSTRUCTION
-    * must be read-only (PlanAudit/Perf/tests build plans repeatedly without
+    * must be read-only (PlanAudit/tests build plans repeatedly without
     * running them), so the rm + ingest side effects run once behind this
     * memo and every later call just reads the written table.
     */

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util.OptionalLong
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -81,7 +82,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     with FunctionCatalog {
 
   private var catalogName: String = _
-  private var root: String = _
+  private var initRoot: String = _
+
+  /** the root set in the CURRENT conf: Spark initialises a catalog once per
+    * session, so a re-pointed `spark.sql.catalog.<name>.root` (the fixture
+    * queries keep one root per data dir) must be read here, not the first
+    */
+  private def root: String =
+    org.apache.spark.sql.internal.SQLConf.get
+      .getConfString(s"spark.sql.catalog.$catalogName.root", initRoot)
 
   /** the ONE catalog function: `bucket(n, key)` — what the scan's reported
     * `KeyGroupedPartitioning` transform resolves through
@@ -134,7 +143,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
-    root = Option(options.get("root")).getOrElse(throw new IllegalArgumentException(
+    initRoot = Option(options.get("root")).getOrElse(throw new IllegalArgumentException(
       s"catalog '$name' requires spark.sql.catalog.$name.root = <directory of table logs>"))
   }
 
@@ -1520,7 +1529,7 @@ private[sources] class GraftLogScan(path: String, v: Long, required: StructType,
       // falls back to the Group row reader. Everything else rows.
       def conf(key: String, dflt: Boolean): Boolean =
         try SparkSession.active.conf.get(key, dflt.toString).toBoolean
-        catch { case _: Throwable => dflt }
+        catch { case NonFatal(_) => dflt }
       import org.apache.spark.sql.graftx.VectorizedLogReader
       val flat = VectorizedLogReader.flatSchema(required)
       val vec = flat ||

@@ -16,7 +16,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * Wire-up options:
   *  - config: `spark.sql.extensions=org.apache.spark.sql.graftx.GraftExtensions`
   *    (works with spark-submit / connect, no code changes), or
-  *  - builder: `SparkSession.builder().withExtensions(new GraftExtensions)`, or
+  *  - builder: `.withExtensions(new GraftExtensions)` on the session builder, or
   *  - post-hoc: [[GraftExtensions.register]] on a live session (tests, REPL —
   *    extension instances configured at build time don't apply to an
   *    already-created session returned by `getOrCreate`).

@@ -953,4 +953,23 @@ class CatalogSpec extends SparkSpec {
       spark.sql("INSERT INTO graftcat.bfact SELECT k, v FROM bfact_src")
     }
   }
+
+  test("catalog_bucketed_join follows its fixture root to a second data dir in one session") {
+    // Spark initialises the `graft` catalog once per session: the second
+    // dir's re-pointed root must still be the one its tables land in
+    val key = "spark.sql.sources.v2.bucketing.enabled"
+    val saved = spark.conf.getOption(key)
+    def nRows(dir: String): Long =
+      SparkEntry.queries("catalog_bucketed_join")(spark, dir)
+        .agg(sum("n_rows")).collect().head.getLong(0)
+    try {
+      assert(nRows(sfDir) > 0L)
+      val dir = "/root/testdata/sf0.01"
+      val expected = Tables.load(spark, dir, "orders")
+        .join(Tables.load(spark, dir, "customer"), col("o_custkey") === col("c_custkey"))
+        .where(floor(col("o_totalprice") * 100) < 40000000L)
+        .count()
+      assert(nRows(dir) == expected)
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

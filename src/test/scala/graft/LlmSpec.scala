@@ -1493,6 +1493,21 @@ class LlmSpec extends SparkSpec {
     assert(full.nonEmpty, "vacuous: no near-dup pairs at spec scale")
   }
 
+  test("Memo.releaseAll leaves no dedup cache pinned, inverted index included") {
+    // start from no cached index (an earlier spec may have built one), so
+    // the index these queries cache is theirs to release
+    spark.catalog.clearCache()
+    Memo.releaseAll()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Seq("dedup_ppjoin", "dedup_jaccard").foreach { q =>
+      SparkEntry.queries(q)(spark, sfDir).write.mode("overwrite").format("noop").save()
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet != before, "vacuous: nothing cached")
+    Memo.releaseAll()
+    val after = spark.sparkContext.getPersistentRDDs.keySet
+    assert(after == before, s"still pinned after releaseAll: ${after -- before}")
+  }
+
   test("semdedup: kept/dropped partition the corpus; every cell keeps its centroid-nearest-last anchor") {
     val out = Similarity.semDedup(spark, sfDir)
       .select("vec_id", "cell", "cent_e6", "n_dom", "kept").collect()

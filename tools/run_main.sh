@@ -1,5 +1,5 @@
 #!/bin/bash
-# Direct `java` runner for graft mains (Bench/Perf/PlanAudit/Verify…):
+# Direct `java` runner for graft mains (Bench/Verify/PlanAudit/ScaleProbe…):
 # same JVM flags as build.sbt's forked run, no sbt startup. Usage:
 #   tools/run_main.sh graft.Bench [args…]
 # Requires a prior `sbt compile Compile/copyResources` (plain `compile`
